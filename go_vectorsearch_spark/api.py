@@ -28,6 +28,7 @@ manifest level, exactly the IVF inverted-list layout
 
 from __future__ import annotations
 
+import functools
 import os
 import threading
 from contextlib import contextmanager as _contextmanager
@@ -37,6 +38,7 @@ from collections.abc import Sequence
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from go_vectorsearch_spark.operators.relational import lookup_by_keys
 
@@ -625,6 +627,38 @@ class _VersionedTable:
                 shutil.rmtree(bpath, ignore_errors=True)
 
 
+# result schemas of the search family: one query's page, and the
+# batched pages keyed by the query's index into the request
+_SEARCH_RESULT = (
+    "document_id long, name string, external_id string, "
+    "payload_json string, score double"
+)
+_MANY_RESULT = f"q_ix long, {_SEARCH_RESULT}"
+
+
+@functools.lru_cache(maxsize=8)
+def _struct(ddl: str) -> StructType:
+    return StructType.fromDDL(ddl)
+
+
+def _local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A small driver-held frame built through Arrow. It plans as a
+    LocalTableScan, so neither building nor collecting it runs a Spark
+    job; a list ``createDataFrame`` plans as Scan ExistingRDD and runs
+    a job on every collect, even when empty. The rows ship inside the
+    plan, so this is for request-sized rows only: pages, probe lists,
+    merged widening candidates."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = _struct(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def _rank_probe_ids(
     cent_rows: list[tuple[int, list[float]]],
     query_vec: Sequence[float],
@@ -1114,11 +1148,7 @@ class Engine:
         return self._hydrate_page(page_rows, scope)
 
     def _empty_search_result(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            "document_id long, name string, external_id string, "
-            "payload_json string, score double",
-        )
+        return _local_frame(self.spark, [], _SEARCH_RESULT)
 
     def search_many(
         self,
@@ -1161,11 +1191,7 @@ class Engine:
         count, offset, nprobe = normalize_search_args(count, offset, nprobe)
         scope = self._category_id(owner, category)
         if scope is None or not texts:
-            return self.spark.createDataFrame(
-                [],
-                "q_ix long, document_id long, name string, "
-                "external_id string, payload_json string, score double",
-            )
+            return self._empty_many_result()
         qvecs = self._embed_queries(
             [f"{SEARCH_QUERY_PREFIX}{t}" for t in texts]
         )
@@ -1180,7 +1206,7 @@ class Engine:
             return (
                 frame.withColumn("_rn", F.row_number().over(w))
                 .filter((F.col("_rn") > offset) & (F.col("_rn") <= count + offset))
-                .select("q_ix", "document_id", "score")
+                .select("q_ix", "document_id", "score", "_rn")
                 .collect()
             )
 
@@ -1227,11 +1253,7 @@ class Engine:
         return self._hydrate_pages_many(page_rows, scope)
 
     def _empty_many_result(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            "q_ix long, document_id long, name string, "
-            "external_id string, payload_json string, score double",
-        )
+        return _local_frame(self.spark, [], _MANY_RESULT)
 
     def _allowed_docs(self, scope: int, where) -> DataFrame:
         """The category-scoped allowed-document frame for a ``where``
@@ -1270,8 +1292,8 @@ class Engine:
         ]
         if not probe_rows:
             return None
-        probe = self.spark.createDataFrame(
-            probe_rows, "q_ix long, _qvec array<double>, centroid_id long"
+        probe = _local_frame(
+            self.spark, probe_rows, "q_ix long, _qvec array<double>, centroid_id long"
         )
         all_probed = sorted({r[2] for r in probe_rows})
         from go_vectorsearch_spark.functions.vector import cosine_similarity
@@ -1294,39 +1316,13 @@ class Engine:
         )
 
     def _hydrate_pages_many(self, page_rows: list, scope: int) -> DataFrame:
-        """Hydrate collected (q_ix, document_id, score) pages — the
-        batch form of _hydrate_page: one manifest-pruned documents
-        read for all pages."""
-        if not page_rows:
-            return self._empty_many_result()
-        ids = sorted({r["document_id"] for r in page_rows})
-        page = F.broadcast(
-            self.spark.createDataFrame(
-                [
-                    (r["q_ix"], r["document_id"], float(r["score"]))
-                    for r in page_rows
-                ],
-                "q_ix long, document_id long, score double",
-            )
-        )
-        docs = (
-            self.t["documents"]
-            .read(partition_values=sorted({i % N_DOC_BUCKETS for i in ids}))
-            .filter(
-                F.col("document_id").isin(ids)
-                & (F.col("category_id") == scope)
-            )
-        )
-        return (
-            docs.join(page, "document_id")
-            .select(
-                "q_ix", "document_id", "name", "external_id",
-                "payload_json", "score",
-            )
-            .orderBy(
-                "q_ix", F.desc(F.round("score", 6)), F.asc("document_id")
-            )
-        )
+        """Hydrate collected (q_ix, document_id, score, _rn) pages — the
+        batch form of :meth:`_hydrate_page`, one documents read for all
+        pages. Pages are assembled by (q_ix, _rn): ``_rn`` is each row's
+        rank within its query, so the widening loop may hand rows over
+        in any query order."""
+        rows = sorted(page_rows, key=lambda r: (r["q_ix"], r["_rn"]))
+        return self._hydrate(rows, scope, batched=True)
 
     def search_many_hybrid(
         self,
@@ -1542,10 +1538,8 @@ class Engine:
                     if d not in merged or s > merged[d]:
                         merged[d] = s
             prev = nxt
-        if not merged:
-            return self.spark.createDataFrame([], "document_id long, score double")
-        return self.spark.createDataFrame(
-            sorted(merged.items()), "document_id long, score double"
+        return _local_frame(
+            self.spark, sorted(merged.items()), "document_id long, score double"
         )
 
     def _vector_topk(
@@ -1661,7 +1655,7 @@ class Engine:
                     with_vector=True,
                 ).collect()
         # rel = round(score, 6): the engine's ranking precision
-        # everywhere (brute_force_topk, pagination, hydration), so
+        # everywhere (brute_force_topk, pagination, fusion), so
         # lambda=1 reproduces search()'s order INCLUDING its rounded-tie
         # id ascending resolution (the pool arrives in that order and
         # argmax keeps the first max). Reported scores stay raw.
@@ -1672,50 +1666,48 @@ class Engine:
             mmr_lambda,
         )
         page = [rows[i] for i in picks[offset : offset + count]]
-        return self._hydrate_page(page, scope, keep_order=True)
+        return self._hydrate_page(page, scope)
 
-    def _hydrate_page(
-        self, page_rows: list, scope: int, keep_order: bool = False
-    ) -> DataFrame:
-        """Hydrate a collected (document_id, score) page.
+    def _hydrate_page(self, page_rows: list, scope: int) -> DataFrame:
+        """Hydrate a collected (document_id, score) page, given in rank
+        order: the TakeOrdered top-k, a ``paginate`` slice, an
+        ``rrf_fuse`` result or the MMR pick order. The page keeps that
+        order."""
+        return self._hydrate(page_rows, scope, batched=False)
 
-        The reference collects the page's ids and hydrates them with a
-        separate point query (server/search.go:285-308); mirroring
-        that lets the documents scan prune to the <= page-size ids'
-        HASH BUCKETS at the manifest level — hydration never scans the
-        corpus-sized documents table (its pre-r4 shape: a full scan
-        joined against the broadcast page).
-        """
+    def _hydrate(self, page_rows: list, scope: int, batched: bool) -> DataFrame:
+        """Search step 7 as the reference does it (server/search.go:
+        285-308): read the page's documents by id, then merge them into
+        the ranked page on the driver.
+
+        One Spark job: a documents read pruned at the manifest level to
+        the page ids' hash buckets, filtered to those ids in ``scope``,
+        narrowed to the payload columns and collected. A page holds at
+        most 20 documents per query, so the collect is request-sized and
+        hydration never scans the corpus-sized documents table. The
+        merge keeps ``page_rows``' order and drops an id that is no
+        longer in the category, as an inner join would. The result is a
+        local frame, so the caller's ``collect()`` runs no job.
+        ``batched`` pages carry the query index ``q_ix`` first."""
+        ddl = _MANY_RESULT if batched else _SEARCH_RESULT
         if not page_rows:
-            return self._empty_search_result()
-        ids = [r["document_id"] for r in page_rows]
-        page = F.broadcast(
-            self.spark.createDataFrame(
-                [
-                    (i, r["document_id"], float(r["score"]))
-                    for i, r in enumerate(page_rows)
-                ],
-                "_rank long, document_id long, score double",
-            )
-        )
-        docs = self.t["documents"].read(
-            partition_values=sorted({i % N_DOC_BUCKETS for i in ids})
-        ).filter(F.col("document_id").isin(ids) & (F.col("category_id") == scope))
-        hydrated = docs.join(page, "document_id", "inner").select(
-            "_rank", "document_id", "name", "external_id", "payload_json", "score"
-        )
-        # keep_order (the MMR path): the caller's row order IS the rank.
-        # Default: deterministic reference rank order — pagination ranked
-        # by round(score, 6) with id tie-break (topk_paginated), so the
-        # hydrated sort must use the SAME key; raw score would let rows
-        # equal at 6 decimals display in a different order than the rank
-        # that paginated them (tiny result, single-partition sort)
-        order = (
-            [F.asc("_rank")]
-            if keep_order
-            else [F.desc(F.round("score", 6)), F.asc("document_id")]
-        )
-        return hydrated.orderBy(*order).drop("_rank")
+            return _local_frame(self.spark, [], ddl)
+        ids = sorted({r["document_id"] for r in page_rows})
+        docs = {
+            d["document_id"]: (d["name"], d["external_id"], d["payload_json"])
+            for d in self.t["documents"]
+            .read(partition_values=sorted({i % N_DOC_BUCKETS for i in ids}))
+            .filter(F.col("document_id").isin(ids) & (F.col("category_id") == scope))
+            .select("document_id", "name", "external_id", "payload_json")
+            .collect()
+        }
+        out = [
+            ((r["q_ix"],) if batched else ())
+            + (r["document_id"], *docs[r["document_id"]], float(r["score"]))
+            for r in page_rows
+            if r["document_id"] in docs
+        ]
+        return _local_frame(self.spark, out, ddl)
 
     # -- hybrid retrieval (engine extension beyond the reference) ----------
     def _text_index_path(self, cid: int) -> str:
@@ -2838,7 +2830,8 @@ class Engine:
         if where is not None and vector is not None:
             n_cent = len(self._category_centroids(scope))
             first_rows = vector.collect()
-            vector = self.spark.createDataFrame(
+            vector = _local_frame(
+                self.spark,
                 [(int(r["document_id"]), float(r["score"])) for r in first_rows],
                 "document_id long, score double",
             )

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -34,9 +35,10 @@ def query_vec_lit(query_vec: Sequence[float]) -> Column:
     becomes a constant in the codegen'd expression, shipped once with
     the task binary - strictly cheaper than a broadcast join.
     """
-    # a true array Literal (one node), not CreateArray of d literal
-    # children re-evaluated per row
-    return F.lit([float(x) for x in query_vec])
+    # a true array Literal (one node): F.lit of a numpy array crosses
+    # py4j once, while F.lit of a list builds array(lit, ...) with one
+    # py4j call per element
+    return F.lit(np.asarray(query_vec, dtype=np.float64))
 
 
 def score_cosine(
@@ -100,8 +102,8 @@ def topk_paginated(
     # one pagination implementation: reuse relational.paginate with the
     # SAME total order brute_force_topk ranks by — (round(score, 6)
     # desc, id asc). Raw-score ranking here would let rows equal at 6
-    # decimals slice into pages in a different order than the top-k /
-    # hydration display order, so a page boundary could drop or
+    # decimals slice into pages in a different order than the top-k
+    # display order, so a page boundary could drop or
     # duplicate a rounded-tie row.
     return paginate(
         topk_df, [F.desc(F.round("score", 6)), F.asc(id_col)], count, offset
@@ -218,8 +220,6 @@ def mmr_select(
     distributing a k-step sequential loop over a bounded pool would add
     k job launches to save microseconds of BLAS.
     """
-    import numpy as np
-
     n = len(scores)
     if n == 0 or k <= 0:
         return []

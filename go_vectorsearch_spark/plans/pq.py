@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from go_vectorsearch_spark.operators.search import query_vec_lit
 from go_vectorsearch_spark.plans.ivf import _numpy_lloyd, deterministic_sample
 
 # expression-path ceiling: the LUT folds into codegen as m*k_sub float
@@ -278,7 +279,7 @@ def _exact_rerank(
 
     q = np.asarray(qvec, dtype=np.float64)
     qn = np.linalg.norm(q)
-    qlit = F.lit([float(x / qn if qn > 0 else x) for x in q])
+    qlit = query_vec_lit(q / qn if qn > 0 else q)
     return (
         cands.withColumn("score", dot(l2_normalize(F.col(vec_col)), qlit))
         # the registry's every-LIMIT-total-order convention
@@ -339,7 +340,7 @@ def pq_candidate_frame(
     )
     q = np.asarray(qvec, dtype=np.float64)
     qn = np.linalg.norm(q)
-    qlit = F.lit([float(x / qn if qn > 0 else x) for x in q])
+    qlit = query_vec_lit(q / qn if qn > 0 else q)
     # id is unique, so the inner join keeps exactly the cand_k survivors;
     # the exact dot runs on those rows alone and the final TakeOrdered
     # re-establishes ADC order over cand_k rows (driver-cheap)

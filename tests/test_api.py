@@ -4,6 +4,7 @@ refresh over managed versioned tables (reference API surface §2.11)."""
 from __future__ import annotations
 
 import json
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -56,6 +57,55 @@ def test_search_missing_scope_empty(engine):
     eng, _ = engine
     assert eng.search("nobody", "wiki", "x").count() == 0
     assert eng.search("acme", "nope", "x").count() == 0
+
+
+def test_search_hydration_one_job_and_free_collect(engine, monkeypatch):
+    """Hydration is one pruned documents point-read merged into the
+    ranked page on the driver (server/search.go:285-308): a warm search
+    runs exactly one Spark job inside it, and collecting the returned
+    page, or a missing category's empty page, runs none."""
+    eng, ids = engine
+    sc = eng.spark.sparkContext
+    st = sc.statusTracker()
+    orig = eng._hydrate_page
+
+    def hydrate_in_group(*a, **kw):
+        sc.setJobGroup("hydrate", "hydrate")
+        try:
+            return orig(*a, **kw)
+        finally:
+            sc.setJobGroup("search", "search")
+
+    def jobs(group):
+        return len(st.getJobIdsForGroup(group))
+
+    eng.search("acme", "wiki", "spark shuffles", count=3, nprobe=-1).collect()
+    monkeypatch.setattr(eng, "_hydrate_page", hydrate_in_group)
+    try:
+        sc.setJobGroup("search", "search")
+        page = eng.search("acme", "wiki", "spark shuffles", count=3, nprobe=-1)
+        sc.setJobGroup("collect", "collect")
+        rows = page.collect()
+        sc.setJobGroup("search", "search")
+        missing = eng.search("acme", "nope", "x")
+        sc.setJobGroup("collect-empty", "collect-empty")
+        empty = missing.collect()
+        # listener events arrive in submission order: once a later job
+        # is visible, every job above is counted
+        sc.setJobGroup("fence", "fence")
+        sc.parallelize([0], 1).count()
+        deadline = time.monotonic() + 30
+        while not jobs("fence") and time.monotonic() < deadline:
+            time.sleep(0.05)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert 1 <= len(rows) <= 3 and {r["document_id"] for r in rows} <= set(ids)
+    assert all(r["payload_json"] for r in rows)
+    assert empty == []
+    assert jobs("hydrate") == 1
+    assert jobs("collect") == 0
+    assert jobs("collect-empty") == 0
 
 
 def test_fetch_category_names(engine):

@@ -42,13 +42,6 @@ def main():
     spark = get_spark("job-counts")
     st = spark.sparkContext.statusTracker()
 
-    def njobs():
-        ids = st.getJobIdsForGroup(None)
-        all_ids = []
-        # getJobIdsForGroup(None) returns jobs with no group; use the
-        # global id space instead: highest seen job id
-        return None
-
     # simplest robust counter: AppStatusStore via REST is off (no UI);
     # use sc.statusTracker().getJobIdsForGroup with explicit groups
     results = []
