@@ -59,7 +59,7 @@ def main() -> None:
     # inference — a driver-side metadata read, no scan job); measured
     # queries stay cold-per-JVM.
     #   * Python UDF worker fork+import (process-reused afterwards)
-    n_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n_cpus = spark.sparkContext.defaultParallelism  # the session's local[N]
     spark.range(n_cpus).repartition(n_cpus).mapInPandas(
         lambda it: it, schema="id long"
     ).count()

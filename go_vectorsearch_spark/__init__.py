@@ -3,7 +3,7 @@ data-processing capabilities of the reference vector-search engine
 (expki/go-vectorsearch, surveyed in SURVEY.md), rebuilt Spark-first.
 
 Layout:
-    session     - SparkSession factory tuned for the local[32] harness
+    session     - SparkSession factory sized from the host
     sources     - table loaders / schema registry for the driver testdata
     functions   - columnar vector + text kernels (native expressions first)
     operators   - relational / top-k / dedup / search operators

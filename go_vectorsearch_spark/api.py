@@ -28,7 +28,6 @@ manifest level, exactly the IVF inverted-list layout
 
 from __future__ import annotations
 
-import functools
 import os
 import threading
 from contextlib import contextmanager as _contextmanager
@@ -38,9 +37,10 @@ from collections.abc import Sequence
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from go_vectorsearch_spark.operators.relational import lookup_by_keys
+from go_vectorsearch_spark.sources.io import atomic_write
+from go_vectorsearch_spark.sources.io import local_frame as _local_frame
 
 from go_vectorsearch_spark.functions.vector import dequantize, quantize, vector_range
 from go_vectorsearch_spark.operators.assign import assign_nearest
@@ -54,7 +54,6 @@ from go_vectorsearch_spark.operators.search import (
     brute_force_topk_with_vector,
     mmr_select,
     normalize_search_args,
-    topk_paginated,
 )
 
 EMBED_DIM = 64  # matches the driver testdata's embedding width
@@ -285,12 +284,13 @@ class _VersionedTable:
                 tls.fd.close()
 
     def _commit(self, v: int, parts: dict[str, list[str]], keep: int) -> None:
+        """Publish version ``v``: the manifest first, then the pointer,
+        each replaced atomically, so a lock-free reader resolves either
+        the old version or the new one."""
         import json
 
-        with open(self._manifest_path(v), "w") as f:
-            json.dump({"parts": parts}, f)
-        with open(self._ptr, "w") as f:
-            f.write(str(v))
+        atomic_write(self._manifest_path(v), json.dumps({"parts": parts}))
+        atomic_write(self._ptr, str(v))
         self._vacuum(v, keep)
 
     def _write_batch(self, df: DataFrame, v: int) -> dict[str, list[str]]:
@@ -347,7 +347,7 @@ class _VersionedTable:
         if v < 0:
             if version is not None:
                 raise KeyError(f"{self.name}: version {version} not on disk")
-            return self.spark.createDataFrame([], self.schema)
+            return _local_frame(self.spark, [], self.schema)
         parts = self._manifest(v)
         if partition_values is not None:
             keys = {str(x) for x in partition_values}
@@ -355,7 +355,7 @@ class _VersionedTable:
         else:
             dirs = [d for k in sorted(parts) for d in parts[k]]
         if not dirs:
-            return self.spark.createDataFrame([], self.schema)
+            return _local_frame(self.spark, [], self.schema)
         return (
             self.spark.read.schema(self.schema)
             # recursiveFileLookup disables partition-dir inference, so
@@ -636,29 +636,6 @@ _SEARCH_RESULT = (
 _MANY_RESULT = f"q_ix long, {_SEARCH_RESULT}"
 
 
-@functools.lru_cache(maxsize=8)
-def _struct(ddl: str) -> StructType:
-    return StructType.fromDDL(ddl)
-
-
-def _local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
-    """A small driver-held frame built through Arrow. It plans as a
-    LocalTableScan, so neither building nor collecting it runs a Spark
-    job; a list ``createDataFrame`` plans as Scan ExistingRDD and runs
-    a job on every collect, even when empty. The rows ship inside the
-    plan, so this is for request-sized rows only: pages, probe lists,
-    merged widening candidates."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    struct = _struct(ddl)
-    table = pa.Table.from_pylist(
-        [dict(zip(struct.names, r)) for r in rows],
-        schema=to_arrow_schema(struct),
-    )
-    return spark.createDataFrame(table, struct)
-
-
 def _rank_probe_ids(
     cent_rows: list[tuple[int, list[float]]],
     query_vec: Sequence[float],
@@ -826,30 +803,8 @@ class Engine:
         )
 
     def _embed_query(self, qtext: str) -> list[float]:
-        """One query vector, driver-side (the reference embeds the query
-        with the same provider call as uploads, server/search.go:124-147).
-        HTTP mode posts a single-text batch; noop mode evaluates the
-        expression on a 1-row frame."""
-        if self.provider:
-            import numpy as np
-
-            # same request shape AND options as the upload path (shared
-            # helper — the reference embeds the query with the same
-            # provider call as uploads, server/search.go:124-147)
-            codes, lo, hi = self._embed_once_failover([qtext])
-            # quantize-at-decode round-trip: the reference scores the
-            # query against dequantized stored vectors with the query
-            # itself having passed through the same u8 codec
-            span = np.float32(hi[0]) - np.float32(lo[0])
-            return (
-                np.float32(lo[0]) + codes[0].astype(np.float32) / np.float32(255.0) * span
-            ).astype(float).tolist()
-        row = (
-            self.spark.range(1)
-            .select(noop_embed(F.lit(qtext), dim=self.embed_dim).alias("v"))
-            .head()
-        )
-        return row[0]
+        """One query vector: :meth:`_embed_queries` of a one-text batch."""
+        return self._embed_queries([qtext])[0]
 
     # -- id allocation ----------------------------------------------------
     def _next_id(self, table: str, id_col: str) -> int:
@@ -1089,6 +1044,8 @@ class Engine:
         return ids
 
     # -- search (server/search.go:115-334) ---------------------------------
+    # Every search method gets its vector rows from _vector_rows; the
+    # methods differ only in the page they build from those rows.
     def search(
         self,
         owner: str,
@@ -1099,53 +1056,19 @@ class Engine:
         nprobe: int = 0,
         where=None,
     ) -> DataFrame:
-        """Vector search (server/search.go:115-334). ``where`` — an
-        optional Column predicate over the documents table — PRE-filters
-        the probed scan through a doc-id semi-join (same contract as
-        :meth:`search_hybrid` and plans/ivf.ivf_search(where=)): the
-        page holds ``count`` matching documents whenever that many
-        matches exist in the probed lists."""
+        """Vector search (server/search.go:115-334): the query's top
+        ``count + offset`` documents from :meth:`_vector_rows`, sliced
+        to the page and hydrated. ``where`` — an optional Column
+        predicate over the documents table — pre-filters the probed
+        scan, so the page holds ``count`` matching documents whenever
+        that many matches exist."""
         count, offset, nprobe = normalize_search_args(count, offset, nprobe)
         scope = self._category_id(owner, category)
         if scope is None:  # missing owner/category -> empty result
             return self._empty_search_result()  # (server/search.go:156-177)
-        allowed = None if where is None else self._allowed_docs(scope, where)
-        qtext = f"{SEARCH_QUERY_PREFIX}{text}"
-        qvec = self._embed_query(qtext)
-        topk = self._vector_topk(scope, qvec, count + offset, nprobe, allowed=allowed)
-        if topk is None:
-            return self._empty_search_result()
-        # collect the full top-(count+offset) once; the page is a local
-        # slice (brute_force_topk already emitted the exact total order)
-        # and the widening loop merges against these rows
-        top_rows = topk.collect()
-        page_rows = top_rows[offset : offset + count]
-        # adaptive probe widening under a predicate (the serving twin of
-        # plans/ivf.ivf_search_adaptive): a selective where= can thin
-        # the probed lists below a full page while matches sit in
-        # unprobed lists — double nprobe until the page fills or the
-        # probe set is exhausted. INCREMENTAL (r6): each round scores
-        # only the newly added lists and merges driver-side
-        # (_widen_vector_rows — exact, not an approximation). The fill
-        # target is clamped to |allowed| — computed LAZILY, only when
-        # the first page underfills — so a predicate with fewer than
-        # count matches in total stops the loop as soon as every
-        # existing match is found. Like every stop-on-fill ANN loop,
-        # scores of matches found in the last widening step are
-        # probe-limited (the doc is present; a better-scoring chunk of
-        # it may sit in an unprobed list) — identical semantics across
-        # search/search_many/search_hybrid. Without a predicate the
-        # reference semantics (fixed nprobe) stand.
-        if where is not None and len(page_rows) < count:
-            n_cent = len(self._category_centroids(scope))
-            target = min(count, max(0, allowed.count() - offset))
-            if len(page_rows) < target and nprobe < n_cent:
-                merged = self._widen_vector_rows(
-                    scope, qvec, count + offset, nprobe, allowed,
-                    first_rows=top_rows, needed=offset + target,
-                )
-                page_rows = topk_paginated(merged, count, offset).collect()
-        return self._hydrate_page(page_rows, scope)
+        qvec = self._embed_query(f"{SEARCH_QUERY_PREFIX}{text}")
+        rows = self._vector_rows(scope, [qvec], count + offset, nprobe, where)[0]
+        return self._hydrate_page(rows[offset : offset + count], scope)
 
     def _empty_search_result(self) -> DataFrame:
         return _local_frame(self.spark, [], _SEARCH_RESULT)
@@ -1161,33 +1084,13 @@ class Engine:
         where=None,
     ) -> DataFrame:
         """Batched search: N query texts answered with ONE embed call
-        and ONE Spark plan (engine extension; the reference serves one
-        request per HTTP call). Returns (q_ix, document_id, name,
-        external_id, payload_json, score) where ``q_ix`` indexes into
-        ``texts``; per-query pages match :meth:`search` exactly
-        (same probe ranking, scoring, dedup-by-document, (round-6
-        desc, id asc) order and ``offset`` pagination — asserted in
-        tests). ``where`` pre-filters
-        the probed scan exactly like :meth:`search`'s (shared allowed
-        semi-join), including the adaptive probe widening: after the
-        fused pass, ONLY the underfilled queries (page < count rows,
-        with count clamped to |allowed| — a selective predicate may not
-        have count matches in total) re-probe with doubled nprobe, so
-        batched filtered pages match the single form's
-        ``search(where=)`` pages and the extra work stays
-        Σ-probed-lists of the underfilled subset.
-
-        Shape (plans/ivf.ivf_search_batch applied to the managed
-        store): all texts embed in one provider round-trip (the upload
-        path already batches, server/upload.go:134-152); probe ranking
-        runs driver-side per query over the TTL-cached centroid set;
-        the UNION of probed lists is read once (manifest-pruned) and
-        the (q_ix, qvec, centroid) probe frame broadcasts into it, so
-        a chunk is scored once per query probing its list — candidate
-        work = Σ_q |probed lists of q|, never N × corpus. One shuffle:
-        the per-query dedup + top-k."""
-        from pyspark.sql import Window
-
+        and one scoring plan per round (engine extension; the reference
+        serves one request per HTTP call). Returns (q_ix, document_id,
+        name, external_id, payload_json, score) where ``q_ix`` indexes
+        into ``texts``. Each query's page is the page :meth:`search`
+        returns for that text (asserted in tests): both read their rows
+        from :meth:`_vector_rows`, which scores all queries together
+        (plans/ivf.ivf_search_batch applied to the managed store)."""
         count, offset, nprobe = normalize_search_args(count, offset, nprobe)
         scope = self._category_id(owner, category)
         if scope is None or not texts:
@@ -1195,62 +1098,10 @@ class Engine:
         qvecs = self._embed_queries(
             [f"{SEARCH_QUERY_PREFIX}{t}" for t in texts]
         )
-        best = self._vector_best_many(scope, qvecs, nprobe, where)
-        if best is None:
-            return self._empty_many_result()
-        w = Window.partitionBy("q_ix").orderBy(
-            F.desc(F.round("score", 6)), F.asc("document_id")
+        per_query = self._vector_rows(scope, qvecs, count + offset, nprobe, where)
+        return self._hydrate_pages_many(
+            [rows[offset : offset + count] for rows in per_query], scope
         )
-
-        def _page(frame: DataFrame) -> list:
-            return (
-                frame.withColumn("_rn", F.row_number().over(w))
-                .filter((F.col("_rn") > offset) & (F.col("_rn") <= count + offset))
-                .select("q_ix", "document_id", "score", "_rn")
-                .collect()
-            )
-
-        page_rows = _page(best)
-        if where is not None:
-            # adaptive widening, restricted to the underfilled queries
-            # (the batch twin of search()'s loop — same clamp, same
-            # probe-limited-score caveat, so both forms page
-            # identically): target clamped to |allowed| so a predicate
-            # with fewer than count matches in total stops the loop as
-            # soon as every existing match is found, instead of
-            # escalating to probing all centroids. The |allowed| count
-            # job runs LAZILY — only when some query actually
-            # underfilled, so the common filled-first-pass request pays
-            # nothing extra.
-            from collections import Counter
-
-            n_cent = len(self._category_centroids(scope))
-            filled = Counter(r["q_ix"] for r in page_rows)
-            under = [ix for ix in range(len(texts)) if filled[ix] < count]
-            if under:
-                allowed_n = self._allowed_docs(scope, where).count()
-                target = min(count, max(0, allowed_n - offset))
-                under = [ix for ix in under if filled[ix] < target]
-            cur = nprobe
-            while under and cur < n_cent:
-                cur = min(cur * 2, n_cent)
-                sub = self._vector_best_many(
-                    scope,
-                    [qvecs[i] for i in under],
-                    cur,
-                    where,
-                    q_ixs=under,
-                )
-                if sub is None:
-                    break
-                sub_rows = _page(sub)
-                under_set = set(under)
-                page_rows = [
-                    r for r in page_rows if r["q_ix"] not in under_set
-                ] + sub_rows
-                filled = Counter(r["q_ix"] for r in sub_rows)
-                under = [ix for ix in under if filled[ix] < target]
-        return self._hydrate_pages_many(page_rows, scope)
 
     def _empty_many_result(self) -> DataFrame:
         return _local_frame(self.spark, [], _MANY_RESULT)
@@ -1268,61 +1119,176 @@ class Engine:
             .select("document_id")
         )
 
+    def _vector_rows(
+        self,
+        scope: int,
+        qvecs: list,
+        n: int,
+        nprobe: int,
+        where=None,
+        with_vector: bool = False,
+    ) -> list[list]:
+        """The search family's one vector path: per query vector, its
+        top-``n`` documents as collected (document_id, score[, vector])
+        rows in rank order, round(score, 6) desc then document_id asc.
+
+        Each query probes its ``nprobe`` nearest lists, ranked
+        driver-side over the TTL-cached centroids (the reference's
+        in-process cosine, server/search.go:202-227). Each round is
+        scored by one kernel picked by its number of queries:
+        :meth:`_vector_topk` for one, :meth:`_vector_best_many` for
+        several. ``where`` pre-filters the scored chunks and turns on
+        widening (the serving twin of plans/ivf.ivf_search_adaptive):
+        while a query holds fewer than ``n`` matches and lists remain,
+        its probe count doubles and the next round scores only its
+        newly added lists. The fill target is clamped once to
+        |allowed|, counted only when a first round falls short, so a
+        predicate with fewer than ``n`` matches stops once all are
+        found. Rounds merge by per-document max, which is exact:
+        top-n(A ∪ B) = top-n(top-n(A) ∪ top-n(B)) in the rank order.
+        The merged rows are ranked by the kernels' ``_key``, the score
+        rounded in Spark, so rounding ties resolve as on every page.
+
+        The one caveat, shared by every search method: the score of a
+        match found in the last round is probe-limited; a better chunk
+        of that document may sit in a list never probed. Without
+        ``where`` the reference semantics (fixed ``nprobe``) stand.
+        ``with_vector`` adds each document's best-chunk vector (for
+        one-query callers: the MMR pool)."""
+        from go_vectorsearch_spark.plans.ivf import widen_probe_count
+
+        cents = self._category_centroids(scope)
+        allowed = None if where is None else self._allowed_docs(scope, where)
+        probes = {
+            ix: ids
+            for ix, qv in enumerate(qvecs)
+            if (ids := _rank_probe_ids(cents, qv, nprobe))
+        }
+        found: list[dict] = [{} for _ in qvecs]  # document_id -> best row
+        ranked: dict[int, list[int]] = {}  # full probe order of widened queries
+        probed, target = min(nprobe, len(cents)), None
+        while probes:
+            if len(probes) == 1:
+                [(ix, ids)] = probes.items()
+                rows = [(ix, r) for r in self._vector_topk(
+                    scope, qvecs[ix], n, nprobe, allowed=allowed,
+                    probe_ids=ids, with_vector=with_vector,
+                ).collect()]
+            else:
+                rows = [(r["q_ix"], r) for r in self._vector_best_many(
+                    scope, qvecs, probes, n, allowed).collect()]
+            for ix, r in rows:
+                best = found[ix].get(r["document_id"])
+                if best is None or r["score"] > best["score"]:
+                    found[ix][r["document_id"]] = r
+            if allowed is None or probed >= len(cents):
+                break
+            short = [ix for ix in probes if len(found[ix]) < n]
+            if short and target is None:
+                target = min(n, allowed.count())
+            short = [ix for ix in short if len(found[ix]) < target]
+            nxt = widen_probe_count(probed, len(cents))
+            for ix in short:
+                if ix not in ranked:
+                    ranked[ix] = _rank_probe_ids(cents, qvecs[ix], len(cents))
+            probes = {ix: ranked[ix][probed:nxt] for ix in short}
+            probed = nxt
+        return [
+            sorted(f.values(), key=lambda r: (-r["_key"], r["document_id"]))[:n]
+            for f in found
+        ]
+
+    def _vector_topk(
+        self,
+        scope: int,
+        qvec: list,
+        n: int,
+        nprobe: int,
+        allowed: DataFrame | None = None,
+        probe_ids: list[int] | None = None,
+        with_vector: bool = False,
+    ) -> DataFrame | None:
+        """One-query scoring kernel: the document-level top-``n`` of a
+        category as a TakeOrdered plan with the query as a literal, or
+        None when no centroid probes (empty category). Rows carry the
+        rank key ``_key`` = round(score, 6). ``probe_ids`` overrides the
+        driver-side ranking of the ``nprobe`` nearest lists with an
+        explicit list set (a widening round's new lists); ``allowed``
+        pre-filters the scored documents."""
+        if probe_ids is None:
+            probe_ids = _rank_probe_ids(
+                self._category_centroids(scope), qvec, nprobe
+            )
+        if not probe_ids:
+            return None
+        topk = brute_force_topk_with_vector if with_vector else brute_force_topk
+        return topk(
+            self._probed_chunks(probe_ids, allowed), qvec, n,
+            id_col="embedding_id", vec_col="vector", doc_col="document_id",
+        ).withColumn("_key", F.round("score", 6))
+
+    def _probed_chunks(self, lists: list[int], allowed: DataFrame | None) -> DataFrame:
+        """The chunks of the given inverted lists, restricted to
+        ``allowed`` documents, with their vectors dequantized. The read
+        is pruned at the MANIFEST level, so unprobed lists are never
+        even listed, and the codes dequantize inside the scoring
+        expression (no float table is ever materialized). The allowed
+        set is caller-sized: no broadcast hint, AQE decides."""
+        raw = (
+            self.t["embeddings"]
+            .read(partition_values=lists)
+            .filter(F.col("centroid_id").isin(lists))  # belt-and-braces
+        )
+        if allowed is not None:
+            raw = raw.join(allowed.select("document_id"), "document_id", "left_semi")
+        return dequantized_vector(raw)
+
     def _vector_best_many(
         self,
         scope: int,
         qvecs: list,
-        nprobe: int,
-        where=None,
-        q_ixs: list[int] | None = None,
-    ) -> DataFrame | None:
-        """Batched vector scoring core: per-query best-chunk-per-
-        document frame (q_ix, document_id, score) over the UNION of
-        probed lists (one manifest-pruned read; the probe frame
-        broadcasts in so a chunk scores once per query probing its
-        list). None when no probes (empty category). ``q_ixs`` relabels
-        the output q_ix values (the widening re-probe passes only the
-        underfilled subset but keeps the original indices)."""
-        cents = self._category_centroids(scope)
-        labels = list(range(len(qvecs))) if q_ixs is None else list(q_ixs)
-        probe_rows = [
-            (ix, [float(x) for x in qv], int(cid))
-            for ix, qv in zip(labels, qvecs)
-            for cid in _rank_probe_ids(cents, qv, nprobe)
-        ]
-        if not probe_rows:
-            return None
-        probe = _local_frame(
-            self.spark, probe_rows, "q_ix long, _qvec array<double>, centroid_id long"
-        )
-        all_probed = sorted({r[2] for r in probe_rows})
+        probes: dict[int, list[int]],
+        n: int,
+        allowed: DataFrame | None = None,
+    ) -> DataFrame:
+        """Several-query scoring kernel: (q_ix, document_id, score, _key)
+        rows, the top-``n`` documents of each query ``q_ix`` over its
+        own lists ``probes[q_ix]``, with the rank key ``_key`` =
+        round(score, 6). The union of the probed lists is read once
+        (manifest-pruned) and the (q_ix, query vector, centroid) probe
+        frame broadcasts into it, so a chunk is scored once per query
+        probing its list: candidate work is Σ_q |lists of q|, never
+        N × corpus. One shuffle does the per-query dedup and cut."""
+        from pyspark.sql import Window
+
         from go_vectorsearch_spark.functions.vector import cosine_similarity
 
-        raw = (
-            self.t["embeddings"]
-            .read(partition_values=all_probed)
-            .filter(F.col("centroid_id").isin(all_probed))
+        probe = _local_frame(
+            self.spark,
+            [
+                (ix, [float(x) for x in qvecs[ix]], int(cid))
+                for ix, ids in probes.items()
+                for cid in ids
+            ],
+            "q_ix long, _qvec array<double>, centroid_id long",
         )
-        if where is not None:
-            raw = raw.join(
-                self._allowed_docs(scope, where), "document_id", "left_semi"
-            )
-        emb = dequantized_vector(raw)
-        scored = emb.join(F.broadcast(probe), "centroid_id").withColumn(
-            "_s", cosine_similarity(F.col("vector"), F.col("_qvec"))
+        all_probed = sorted({cid for ids in probes.values() for cid in ids})
+        scored = (
+            self._probed_chunks(all_probed, allowed)
+            .join(F.broadcast(probe), "centroid_id")
+            .withColumn("_s", cosine_similarity(F.col("vector"), F.col("_qvec")))
         )
-        return scored.groupBy("q_ix", "document_id").agg(
-            F.max("_s").alias("score")
+        order = Window.partitionBy("q_ix").orderBy(
+            F.desc("_key"), F.asc("document_id")
         )
-
-    def _hydrate_pages_many(self, page_rows: list, scope: int) -> DataFrame:
-        """Hydrate collected (q_ix, document_id, score, _rn) pages — the
-        batch form of :meth:`_hydrate_page`, one documents read for all
-        pages. Pages are assembled by (q_ix, _rn): ``_rn`` is each row's
-        rank within its query, so the widening loop may hand rows over
-        in any query order."""
-        rows = sorted(page_rows, key=lambda r: (r["q_ix"], r["_rn"]))
-        return self._hydrate(rows, scope, batched=True)
+        return (
+            scored.groupBy("q_ix", "document_id")
+            .agg(F.max("_s").alias("score"))
+            .withColumn("_key", F.round("score", 6))
+            .withColumn("_rn", F.row_number().over(order))
+            .filter(F.col("_rn") <= n)
+            .drop("_rn")
+        )
 
     def search_many_hybrid(
         self,
@@ -1339,8 +1305,8 @@ class Engine:
         RRF) in ONE embed call and one plan per leg — the batch form of
         :meth:`search_hybrid`, per-query pages identical to it (tested).
 
-        The vector leg reuses the batched probe core
-        (:meth:`_vector_best_many`); the lexical leg scores ALL queries
+        The vector leg is each query's top-``fuse_depth`` rows from
+        :meth:`_vector_rows`; the lexical leg scores ALL queries
         against ONE postings scan pruned to the union of every query's
         term buckets, with a broadcast (q_ix, term) frame fanning each
         posting to the queries that contain its term — per-term idf/df
@@ -1407,12 +1373,14 @@ class Engine:
         qvecs = self._embed_queries(
             [f"{SEARCH_QUERY_PREFIX}{t}" for t in texts]
         )
-        best = self._vector_best_many(scope, qvecs, nprobe)
-        if best is not None:
+        vec = [
+            (ix, r["document_id"], r["score"])
+            for ix, rows in enumerate(self._vector_rows(scope, qvecs, fuse_depth, nprobe))
+            for r in rows
+        ]
+        if vec:
             legs.append(
-                best.withColumn("_rn", F.row_number().over(cut))
-                .filter(F.col("_rn") <= fuse_depth)
-                .select("q_ix", "document_id", "score")
+                _local_frame(self.spark, vec, "q_ix long, document_id long, score double")
             )
         if not legs:
             return self._empty_many_result()
@@ -1441,8 +1409,11 @@ class Engine:
             .select("q_ix", "document_id", "score", "_rn")
             .collect()
         )
-        page_rows = [r for r in fused_rows if r["_rn"] > offset]
-        return self._hydrate_pages_many(page_rows, scope)
+        pages: list[list] = [[] for _ in texts]
+        for r in sorted(fused_rows, key=lambda r: r["_rn"]):
+            if r["_rn"] > offset:
+                pages[r["q_ix"]].append(r)
+        return self._hydrate_pages_many(pages, scope)
 
     def _embed_once_failover(self, qtexts: list[str]):
         """embed_texts_once across the provider's api_bases IN ORDER —
@@ -1469,19 +1440,20 @@ class Engine:
         raise last
 
     def _embed_queries(self, qtexts: list[str]) -> list[list[float]]:
-        """All query vectors in ONE provider round-trip (the batch form
-        of :meth:`_embed_query` — same request shape, same
-        quantize-at-decode round-trip per vector)."""
+        """All query vectors in ONE provider round-trip, driver-side (the
+        reference embeds the query with the same provider call as
+        uploads, server/search.go:124-147). HTTP mode shares the upload
+        path's request shape and options, then takes each vector
+        through the same u8 codec the stored vectors passed
+        (quantize-at-decode, ai/aicomms/embed.go:42-50). Noop mode
+        evaluates the expression over a local frame of the texts."""
         if not self.provider:
             rows = (
-                self.spark.createDataFrame(
-                    [(i, t) for i, t in enumerate(qtexts)], "i long, t string"
-                )
+                _local_frame(self.spark, list(enumerate(qtexts)), "i long, t string")
                 .select("i", noop_embed(F.col("t"), dim=self.embed_dim).alias("v"))
-                .orderBy("i")
                 .collect()
             )
-            return [list(r["v"]) for r in rows]
+            return [list(r["v"]) for r in sorted(rows, key=lambda r: r["i"])]
         import numpy as np
 
         codes, lo, hi = self._embed_once_failover(qtexts)
@@ -1491,110 +1463,6 @@ class Engine:
             + codes.astype(np.float32) / np.float32(255.0) * span[:, None]
         )
         return [row.astype(float).tolist() for row in deq]
-
-    def _widen_vector_rows(
-        self,
-        scope: int,
-        qvec: list,
-        n: int,
-        nprobe: int,
-        allowed: DataFrame,
-        first_rows: list,
-        needed: int,
-    ) -> DataFrame:
-        """INCREMENTAL probe widening shared by search()/search_hybrid():
-        the full centroid ranking is computed once (driver-side, cached
-        set); each doubling round scores ONLY the newly added inverted
-        lists and merges driver-side by per-document max — exact,
-        because the global best-chunk score is the max of per-round
-        partials and top-n(A∪B) = top-n(top-n(A) ∪ top-n(B)) under the
-        (round-6 desc, id asc) order both cuts use. The old loop
-        re-scanned and re-scored every already-probed list each round,
-        multiplying scan I/O by log2(n_cent) on the latency path.
-        Stops when ``needed`` documents are found or every list is
-        probed; returns the merged (document_id, score) candidates as a
-        small DataFrame so the FINAL page ordering runs in Spark (same
-        HALF_UP rounding as every other page)."""
-        ranked = _rank_probe_ids(
-            self._category_centroids(scope),
-            qvec,
-            len(self._category_centroids(scope)),
-        )
-        merged: dict[int, float] = {}
-        for r in first_rows:
-            d, s = int(r["document_id"]), float(r["score"])
-            if d not in merged or s > merged[d]:
-                merged[d] = s
-        prev = min(max(nprobe, 1), len(ranked))
-        while len(merged) < needed and prev < len(ranked):
-            nxt = min(prev * 2, len(ranked))
-            sub = self._vector_topk(
-                scope, qvec, n, nprobe=0,
-                allowed=allowed, probe_ids=ranked[prev:nxt],
-            )
-            if sub is not None:
-                for r in sub.collect():
-                    d, s = int(r["document_id"]), float(r["score"])
-                    if d not in merged or s > merged[d]:
-                        merged[d] = s
-            prev = nxt
-        return _local_frame(
-            self.spark, sorted(merged.items()), "document_id long, score double"
-        )
-
-    def _vector_topk(
-        self,
-        scope: int,
-        qvec: list,
-        n: int,
-        nprobe: int,
-        allowed: DataFrame | None = None,
-        probe_ids: list[int] | None = None,
-        with_vector: bool = False,
-    ) -> DataFrame | None:
-        """Document-level vector top-n for a category, or None when no
-        centroid probes (empty category).
-
-        T1 centroid pruning runs DRIVER-SIDE over the TTL-cached
-        centroid set — exactly the reference's in-process V2 cosine
-        over cached centroids (server/search.go:202-227): a repeat
-        search launches zero Spark jobs before the probed scan.
-        ``probe_ids`` overrides the ranking with an explicit list set —
-        the incremental widening loop passes only the NEWLY added
-        lists of each round."""
-        if probe_ids is None:
-            probe_ids = _rank_probe_ids(
-                self._category_centroids(scope), qvec, nprobe
-            )
-        if not probe_ids:
-            return None
-        # probed partitions only — pruned at the MANIFEST level, so the
-        # unprobed inverted lists are never even listed; scoring
-        # dequantizes the stored codes inside the cosine expression
-        # (no float table ever materialized)
-        raw = (
-            self.t["embeddings"]
-            .read(partition_values=probe_ids)
-            .filter(F.col("centroid_id").isin(probe_ids))  # belt-and-braces
-        )
-        if allowed is not None:
-            # PRE-filter (plans/ivf.ivf_search(where=) semantics): only
-            # allowed documents' chunks are scored, so the top-n holds n
-            # allowed docs. Allowed set is caller-sized — no broadcast
-            # hint, AQE decides.
-            raw = raw.join(
-                allowed.select("document_id"), "document_id", "left_semi"
-            )
-        emb = dequantized_vector(raw)
-        if with_vector:
-            return brute_force_topk_with_vector(
-                emb, qvec, n, id_col="embedding_id",
-                vec_col="vector", doc_col="document_id",
-            )
-        return brute_force_topk(
-            emb, qvec, n, id_col="embedding_id",
-            vec_col="vector", doc_col="document_id",
-        )
 
     def search_diverse(
         self,
@@ -1619,10 +1487,10 @@ class Engine:
         relevance (the page's order, not its scores, is what MMR
         changes); the page order is the MMR selection order.
 
-        Plan shape: the distributed part is identical to :meth:`search`
-        (probed manifest-pruned scan -> per-document max -> TakeOrdered
-        top-pool), except the candidate rows carry their best-chunk
-        vector; the greedy MMR loop runs driver-side over the collected
+        The pool is the query's top-``pool`` rows from
+        :meth:`_vector_rows`, as for :meth:`search` (``where`` filters
+        and widens it the same way), with each document's best-chunk
+        vector; the greedy MMR loop runs driver-side over that
         page-scale pool (see operators/search.mmr_select for why that
         is the right side of the boundary).
         """
@@ -1633,27 +1501,10 @@ class Engine:
         scope = self._category_id(owner, category)
         if scope is None:
             return self._empty_search_result()
-        allowed = None if where is None else self._allowed_docs(scope, where)
         qvec = self._embed_query(f"{SEARCH_QUERY_PREFIX}{text}")
-        topk = self._vector_topk(
-            scope, qvec, pool, nprobe, allowed=allowed, with_vector=True
-        )
-        if topk is None:
-            return self._empty_search_result()
-        rows = topk.collect()
-        # filtered underfill: like search()'s adaptive widening, a
-        # selective where= can thin the probed lists below the pool
-        # while matches sit in unprobed lists. The pool is a candidate
-        # set (not a page), so one escalation to nprobe=all replaces
-        # the incremental loop — exact scores, same worst case as the
-        # loop's final doubling, and only under a predicate.
-        if where is not None and len(rows) < pool:
-            n_cent = len(self._category_centroids(scope))
-            if len(rows) < min(pool, allowed.count()) and nprobe < n_cent:
-                rows = self._vector_topk(
-                    scope, qvec, pool, 2**31 - 1, allowed=allowed,
-                    with_vector=True,
-                ).collect()
+        rows = self._vector_rows(
+            scope, [qvec], pool, nprobe, where, with_vector=True
+        )[0]
         # rel = round(score, 6): the engine's ranking precision
         # everywhere (brute_force_topk, pagination, fusion), so
         # lambda=1 reproduces search()'s order INCLUDING its rounded-tie
@@ -1669,30 +1520,34 @@ class Engine:
         return self._hydrate_page(page, scope)
 
     def _hydrate_page(self, page_rows: list, scope: int) -> DataFrame:
-        """Hydrate a collected (document_id, score) page, given in rank
-        order: the TakeOrdered top-k, a ``paginate`` slice, an
-        ``rrf_fuse`` result or the MMR pick order. The page keeps that
-        order."""
-        return self._hydrate(page_rows, scope, batched=False)
+        """Hydrate one collected (document_id, score) page, given in rank
+        order: a :meth:`_vector_rows` slice, an ``rrf_fuse`` result or
+        the MMR pick order. The page keeps that order."""
+        return self._hydrate([page_rows], scope, batched=False)
 
-    def _hydrate(self, page_rows: list, scope: int, batched: bool) -> DataFrame:
+    def _hydrate_pages_many(self, pages: list[list], scope: int) -> DataFrame:
+        """Hydrate one page per query (``pages[q_ix]``, each in rank
+        order) with one documents read for all of them; rows carry
+        ``q_ix`` first."""
+        return self._hydrate(pages, scope, batched=True)
+
+    def _hydrate(self, pages: list[list], scope: int, batched: bool) -> DataFrame:
         """Search step 7 as the reference does it (server/search.go:
-        285-308): read the page's documents by id, then merge them into
-        the ranked page on the driver.
+        285-308): read the pages' documents by id, then merge them into
+        the ranked pages on the driver.
 
         One Spark job: a documents read pruned at the manifest level to
         the page ids' hash buckets, filtered to those ids in ``scope``,
         narrowed to the payload columns and collected. A page holds at
         most 20 documents per query, so the collect is request-sized and
         hydration never scans the corpus-sized documents table. The
-        merge keeps ``page_rows``' order and drops an id that is no
-        longer in the category, as an inner join would. The result is a
-        local frame, so the caller's ``collect()`` runs no job.
-        ``batched`` pages carry the query index ``q_ix`` first."""
+        merge keeps each page's order and drops an id that is no longer
+        in the category, as an inner join would. The result is a local
+        frame, so the caller's ``collect()`` runs no job."""
         ddl = _MANY_RESULT if batched else _SEARCH_RESULT
-        if not page_rows:
+        ids = sorted({r["document_id"] for page in pages for r in page})
+        if not ids:
             return _local_frame(self.spark, [], ddl)
-        ids = sorted({r["document_id"] for r in page_rows})
         docs = {
             d["document_id"]: (d["name"], d["external_id"], d["payload_json"])
             for d in self.t["documents"]
@@ -1702,9 +1557,10 @@ class Engine:
             .collect()
         }
         out = [
-            ((r["q_ix"],) if batched else ())
+            ((ix,) if batched else ())
             + (r["document_id"], *docs[r["document_id"]], float(r["score"]))
-            for r in page_rows
+            for ix, page in enumerate(pages)
+            for r in page
             if r["document_id"] in docs
         ]
         return _local_frame(self.spark, out, ddl)
@@ -2773,25 +2629,19 @@ class Engine:
         rrf_c: int = 60,
         where=None,
     ) -> DataFrame:
-        """Hybrid search: vector top-``fuse_depth`` and BM25
-        top-``fuse_depth`` fused by reciprocal-rank fusion, then paged
-        and hydrated exactly like :meth:`search`. Requires
-        :meth:`build_text_index` to have run for the category (the same
-        explicit-build contract as the centroid index). Lexical-only
-        and vector-only corner cases degrade gracefully: a ranking with
-        no hits simply contributes nothing to the fusion.
+        """Hybrid search: the query's vector top-``fuse_depth`` from
+        :meth:`_vector_rows` and its BM25 top-``fuse_depth``, fused by
+        reciprocal-rank fusion, then paged and hydrated like
+        :meth:`search`. Requires :meth:`build_text_index` for the
+        category (the same explicit-build contract as the centroid
+        index); a leg with no hits contributes nothing to the fusion.
 
-        ``where`` (an optional Column predicate over the documents
-        table: name/external_id/payload_json/document_id) PRE-filters
-        BOTH legs — the allowed doc-id frame is computed once from the
-        category-scoped documents scan, semi-joined into the probed
-        embeddings before vector scoring and into the term-pruned
-        postings before BM25 ranking — so a filtered page holds
-        ``count`` matching documents whenever that many live matches
-        exist (post-filtering the fused page would underfill). The
-        same generalization of the reference's category scoping
-        (server/search.go:229-233) that plans/ivf.ivf_search(where=)
-        makes for raw stores."""
+        ``where`` (a Column predicate over the documents table)
+        pre-filters BOTH legs through the same allowed-document frame:
+        the vector leg as :meth:`search` filters and widens it, the
+        term-pruned postings before BM25 ranking. A filtered page so
+        holds ``count`` matches whenever that many exist, where
+        post-filtering the fused page would underfill."""
         from go_vectorsearch_spark.operators.fulltext import (
             bm25_search_stored,
             rrf_fuse,
@@ -2811,41 +2661,18 @@ class Engine:
         lexical = bm25_search_stored(
             self.spark, path, text, k=fuse_depth, allowed=allowed
         ).withColumnRenamed("doc_id", "document_id")
+        # the vector leg is the query's top-fuse_depth rows from the one
+        # core, filtered and widened like search()'s page; collected, it
+        # joins the fusion as a local frame, so RRF never rescans it
         qvec = self._embed_query(f"{SEARCH_QUERY_PREFIX}{text}")
-        vector = self._vector_topk(scope, qvec, fuse_depth, nprobe, allowed=allowed)
-        # same adaptive widening as search(): under a predicate the
-        # vector leg must not cede fused-rank mass just because the
-        # initial probe set was thin (the count is over a <= fuse_depth
-        # frame, not the corpus). The target is clamped to |allowed| —
-        # a selective predicate with fewer than fuse_depth matches IN
-        # TOTAL would otherwise force the full log2(n_cent) escalation
-        # even when no further matches exist anywhere; the clamp count
-        # runs LAZILY (only when the first probe underfills). The
-        # widening is INCREMENTAL like search()'s (each round scores
-        # only the newly added lists — _widen_vector_rows), and the
-        # collected leg re-materializes as a literal frame so the RRF
-        # fusion never rescans the probed partitions. Like the other
-        # stop-on-fill loops, a match found in the last widening step
-        # carries its probe-limited best-chunk score into the fusion.
-        if where is not None and vector is not None:
-            n_cent = len(self._category_centroids(scope))
-            first_rows = vector.collect()
-            vector = _local_frame(
+        vec = self._vector_rows(scope, [qvec], fuse_depth, nprobe, where)[0]
+        rankings = [lexical]
+        if vec:
+            rankings.append(_local_frame(
                 self.spark,
-                [(int(r["document_id"]), float(r["score"])) for r in first_rows],
+                [(r["document_id"], r["score"]) for r in vec],
                 "document_id long, score double",
-            )
-            if len(first_rows) < fuse_depth and nprobe < n_cent:
-                target = min(fuse_depth, allowed.count())
-                if len(first_rows) < target:
-                    merged = self._widen_vector_rows(
-                        scope, qvec, fuse_depth, nprobe, allowed,
-                        first_rows=first_rows, needed=target,
-                    )
-                    # cut back to the top-fuse_depth leg the fusion
-                    # contract expects (merged may hold a few more)
-                    vector = topk_paginated(merged, fuse_depth, 0)
-        rankings = [lexical] + ([vector] if vector is not None else [])
+            ))
         fused = rrf_fuse(
             rankings, k=count + offset, c=rrf_c, id_col="document_id"
         )

@@ -349,10 +349,10 @@ def _store_manifest(path: str, v: int) -> dict:
 def _store_commit(path: str, v: int, manifest: dict) -> None:
     import json as _json
 
-    with open(f"{path}/v{v}.json", "w") as f:
-        _json.dump(manifest, f)
-    with open(f"{path}/VERSION", "w") as f:
-        f.write(str(v))
+    from go_vectorsearch_spark.sources.io import atomic_write
+
+    atomic_write(f"{path}/v{v}.json", _json.dumps(manifest))
+    atomic_write(f"{path}/VERSION", str(v))
 
 
 # one writer at a time per store path (same process): every commit is a
@@ -780,7 +780,9 @@ def bm25_search_stored(
     index, n_buckets = read_postings(spark, path)
     terms = sorted({t for t in re.split(TOKEN_SPLIT_RE, query.lower()) if t})
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        from go_vectorsearch_spark.sources.io import local_frame
+
+        return local_frame(spark, [], "doc_id long, score double")
     return bm25_search(
         bucket_pruned(index, n_buckets, terms), query, k=k, k1=k1, b=b,
         allowed=allowed,

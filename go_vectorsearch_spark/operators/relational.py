@@ -95,44 +95,6 @@ def cascade_delete_survivors(
     return child.join(victims, fk, "left_anti")
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: explode the small side into ``n_salts``
-    replicas, salt the big side deterministically, join on (key, salt).
-
-    The hot-key cure when AQE's runtime skew splitting isn't available
-    or the skew is in a shuffle-hash join: a key holding 10% of 100 TB
-    no longer lands on one reducer - its rows spread over n_salts tasks,
-    at the price of replicating the small side n_salts times. Salt =
-    xxhash64(whole left row) mod n, so it is deterministic (rerunnable)
-    without requiring any unique column. Result is row-identical to the
-    plain join (asserted in tests).
-
-    Only inner/left are supported: the right side is replicated
-    ``n_salts`` times, so right/full outer joins would emit each
-    unmatched right row once per replica.
-    """
-    if how not in ("inner", "left", "left_outer", "leftouter"):
-        raise ValueError(
-            f"salted_join supports how='inner'/'left' only, got {how!r}: "
-            "the replicated right side would duplicate unmatched right rows"
-        )
-    salt = F.abs(F.xxhash64(*[F.col(c) for c in left.columns]) % n_salts).cast("int")
-    l_salted = left.withColumn("_salt", salt)
-    r_salted = right.crossJoin(
-        left.sparkSession.range(n_salts).select(F.col("id").cast("int").alias("_salt"))
-    )
-    out = l_salted.join(
-        r_salted, on=[*([on] if isinstance(on, str) else on), "_salt"], how=how
-    )
-    return out.drop("_salt")
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -881,7 +881,14 @@ def ivf_search_adaptive(
             spark = index.assigned.sparkSession
             out = spark.createDataFrame(rows, res.schema) if rows else res
             return out, nprobe
-        nprobe = min(nprobe * 2, n_cents)
+        nprobe = widen_probe_count(nprobe, n_cents)
+
+
+def widen_probe_count(probed: int, n_lists: int) -> int:
+    """The one widening schedule of every filtered search (this module's
+    :func:`ivf_search_adaptive` and the Engine's ``_vector_rows``):
+    double the probed list count, capped at the list count."""
+    return min(probed * 2, n_lists)
 
 
 def ivf_search_batch(

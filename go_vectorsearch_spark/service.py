@@ -486,15 +486,34 @@ class Service:
         except (TypeError, ValueError):
             raise BadRequest(f"{key!r} must be a list of integers")
 
-    def search(self, req: dict) -> dict:
-        kwargs = dict(
-            # missing count ≡ 0 in the reference (Go zero-value JSON),
-            # and the engine clamp maps 0 → 1 (server/search.go:116)
+    def _page_args(self, req: dict) -> dict:
+        """The paging arguments every search route shares. A missing
+        count ≡ 0 in the reference (Go zero-value JSON), and the engine
+        clamp maps 0 → 1 (server/search.go:116)."""
+        return dict(
             count=self._int_field(req, "count"),
             offset=self._int_field(req, "offset"),
             nprobe=self._int_field(req, "centroids"),
-            # extension: same JSON filter object as /api/search_hybrid
-            where=self._parse_filter(req.get("filter") or {}),
+        )
+
+    @staticmethod
+    def _documents(rows) -> list[dict]:
+        """An engine page as /api/search's document objects."""
+        return [
+            {
+                "name": r["name"],
+                "external_id": r["external_id"],
+                "document": json.loads(r["payload_json"]),
+                "document_id": r["document_id"],
+                "document_similarity": r["score"],
+            }
+            for r in rows
+        ]
+
+    def search(self, req: dict) -> dict:
+        # extension: same JSON filter object as /api/search_hybrid
+        kwargs = dict(
+            self._page_args(req), where=self._parse_filter(req.get("filter") or {})
         )
         args = (req.get("owner", ""), req.get("category", ""), req.get("text", ""))
         # extension: "mmr" (a number in [0, 1]) switches the page to the
@@ -516,18 +535,7 @@ class Service:
             ).collect()
         else:
             rows = self.engine.search(*args, **kwargs).collect()
-        return {
-            "documents": [
-                {
-                    "name": r["name"],
-                    "external_id": r["external_id"],
-                    "document": json.loads(r["payload_json"]),
-                    "document_id": r["document_id"],
-                    "document_similarity": r["score"],
-                }
-                for r in rows
-            ]
-        }
+        return {"documents": self._documents(rows)}
 
     def categories(self, req: dict) -> dict:
         return {
@@ -580,23 +588,10 @@ class Service:
             req.get("owner", ""),
             req.get("category", ""),
             req.get("text", ""),
-            count=self._int_field(req, "count"),
-            offset=self._int_field(req, "offset"),
-            nprobe=self._int_field(req, "centroids"),
             where=where,
+            **self._page_args(req),
         ).collect()
-        return {
-            "documents": [
-                {
-                    "name": r["name"],
-                    "external_id": r["external_id"],
-                    "document": json.loads(r["payload_json"]),
-                    "document_id": r["document_id"],
-                    "document_similarity": r["score"],
-                }
-                for r in rows
-            ]
-        }
+        return {"documents": self._documents(rows)}
 
     def search_batch(self, req: dict) -> dict:
         """N query texts in one request → one embed round-trip + one
@@ -616,39 +611,20 @@ class Service:
                     "use per-query /api/search_hybrid"
                 )
             rows = self.engine.search_many_hybrid(
-                req.get("owner", ""),
-                req.get("category", ""),
-                texts,
-                count=self._int_field(req, "count"),
-                offset=self._int_field(req, "offset"),
-                nprobe=self._int_field(req, "centroids"),
+                req.get("owner", ""), req.get("category", ""), texts,
+                **self._page_args(req),
             ).collect()
         else:
+            # same JSON filter object as /api/search (wire form of
+            # search_many(where=))
             rows = self.engine.search_many(
-                req.get("owner", ""),
-                req.get("category", ""),
-                texts,
-                count=self._int_field(req, "count"),
-                # "offset" means the same thing on both batch paths
-                # (it was silently ignored here pre-r6)
-                offset=self._int_field(req, "offset"),
-                nprobe=self._int_field(req, "centroids"),
-                # same JSON filter object as /api/search (wire form of
-                # search_many(where=))
-                where=where,
+                req.get("owner", ""), req.get("category", ""), texts,
+                where=where, **self._page_args(req),
             ).collect()
-        results: list[list[dict]] = [[] for _ in texts]
+        pages: list[list] = [[] for _ in texts]
         for r in rows:
-            results[r["q_ix"]].append(
-                {
-                    "name": r["name"],
-                    "external_id": r["external_id"],
-                    "document": json.loads(r["payload_json"]),
-                    "document_id": r["document_id"],
-                    "document_similarity": r["score"],
-                }
-            )
-        return {"results": [{"documents": d} for d in results]}
+            pages[r["q_ix"]].append(r)
+        return {"results": [{"documents": self._documents(p)} for p in pages]}
 
     def admin_refresh(self, req: dict) -> dict:
         """Centroid-index refresh: per (owner, category) when given,

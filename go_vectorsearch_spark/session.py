@@ -1,7 +1,7 @@
 """SparkSession factory.
 
-Tuned for the test harness (single JVM, local[32], 128 GiB) but every
-setting is chosen to also be the right default on a real multi-executor
+Sized from the host by default (every core, a quarter of physical memory
+for the one local-mode JVM, capped at 24 GiB), and every setting is chosen to also be the right default on a real multi-executor
 cluster: AQE on (runtime re-plan, skew-join splitting, partition
 coalescing), Arrow on (pandas-UDF fast path), shuffle partitions sized
 to the parallelism rather than the Spark default of 200.
@@ -14,13 +14,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_defaults() -> tuple[str, str]:
+    """(local core count, driver heap) for this host: every core, and a
+    quarter of physical memory (at least 1 GiB, at most 24 GiB) — the
+    local-mode JVM holds executors and caches, and the Python workers
+    and the OS need the rest."""
+    cpus = os.cpu_count() or 1
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        phys = 4 << 30
+    heap_mb = min(24 << 10, max(1 << 10, phys // 4 >> 20))
+    return str(cpus), f"{heap_mb}m"
+
+
 def get_spark(app_name: str = "spark-vectorsearch") -> SparkSession:
     """Create (or reuse) the engine SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for the local core count so bench runs
-    and tests share one code path.
+    ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_DRIVER_MEM`` override the
+    host-derived core count and driver heap, so bench runs and tests
+    share one code path.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    host_cpus, host_heap = _host_defaults()
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", host_cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -53,8 +69,7 @@ def get_spark(app_name: str = "spark-vectorsearch") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         # local mode = one JVM holds executors AND caches; a small heap
         # GC-thrashes once the bench has persisted indexes/shingle frames
-        # (the harness box has 128 GiB)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", host_heap))
         .config("spark.ui.enabled", "false")
         # Parquet blobs (documents) compress with zstd like the reference
         # stores payloads (database/compression.go:36-47) - free via codec.

@@ -16,9 +16,17 @@ Format notes (scale):
   * csv — flat columns only: array columns (embeddings) are serialized
     to a JSON string column on write and parsed back on read, the
     standard escape hatch for vector data in flat files.
+
+Two small helpers every store shares sit here too: ``atomic_write``
+publishes a manifest or pointer file, and ``local_frame`` builds a
+request-sized frame on the driver.
 """
 
 from __future__ import annotations
+
+import functools
+import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -98,3 +106,45 @@ def read_table(
         if isinstance(f.dataType, T.ArrayType):
             df = df.withColumn(f.name, F.from_json(F.col(f.name), f.dataType))
     return df.select(*[f.name for f in target.fields])
+
+
+def atomic_write(path: str, text: str) -> None:
+    """Publish ``text`` at ``path`` in one step: write a temp file in the
+    same directory, fsync it, then ``os.replace`` it over ``path``. A
+    reader that takes no lock sees the old file or the new one, never a
+    truncated one, and a crash mid-write leaves the old file in place."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path) or ".", prefix=".tmp-")
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(text)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+
+
+@functools.cache
+def _struct(ddl: str) -> T.StructType:
+    # unbounded: callers pass a fixed set of DDL literals
+    return T.StructType.fromDDL(ddl)
+
+
+def local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A small driver-held frame built through Arrow. It plans as a
+    LocalTableScan, so neither building nor collecting it runs a Spark
+    job; a list ``createDataFrame`` plans as Scan ExistingRDD and runs
+    a job on every collect, even when empty. The rows ship inside the
+    plan, so this is for request-sized rows only: pages, probe lists,
+    merged widening candidates, empty reads."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = _struct(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows],
+        schema=to_arrow_schema(struct),
+    )
+    return spark.createDataFrame(table, struct)

@@ -182,9 +182,9 @@ def ingest_documents_text_index(
     # path-derived id would make every recreated-checkpoint micro-batch
     # look like a replay and silently drop it.
     import hashlib
-    import tempfile
     import uuid
 
+    from go_vectorsearch_spark.sources.io import atomic_write
     from go_vectorsearch_spark.streaming import require_local_path
 
     # the token must live INSIDE the checkpoint and travel with it; a
@@ -211,17 +211,9 @@ def ingest_documents_text_index(
             ).hexdigest()[:8]
         else:
             token = uuid.uuid4().hex[:16]
-        # atomic write (tmp + rename): a crash mid-write must not leave
-        # a short/empty token that reads back as a different stream id
-        fd, tmp = tempfile.mkstemp(dir=checkpoint_dir, prefix="._gvs_id")
-        try:
-            with os.fdopen(fd, "w") as f:
-                f.write(token)
-            os.replace(tmp, token_file)
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
+        # atomic: a crash mid-write must not leave a short/empty token
+        # that reads back as a different stream id
+        atomic_write(token_file, token)
     with open(token_file) as f:
         stream_id = f.read().strip()
 

@@ -59,12 +59,17 @@ def test_search_missing_scope_empty(engine):
     assert eng.search("acme", "nope", "x").count() == 0
 
 
-def test_search_hydration_one_job_and_free_collect(engine, monkeypatch):
+def test_search_hydration_one_job_and_free_collect(engine, monkeypatch, tmp_path):
     """Hydration is one pruned documents point-read merged into the
     ranked page on the driver (server/search.go:285-308): a warm search
     runs exactly one Spark job inside it, and collecting the returned
-    page, or a missing category's empty page, runs none."""
+    page, or a missing category's empty page, runs none. Neither does
+    collecting a read of an empty table: a table never written, or a
+    partition set with no data."""
+    from go_vectorsearch_spark.api import _VersionedTable
+
     eng, ids = engine
+    never = _VersionedTable(eng.spark, str(tmp_path), "never", "id long, x string")
     sc = eng.spark.sparkContext
     st = sc.statusTracker()
     orig = eng._hydrate_page
@@ -90,6 +95,10 @@ def test_search_hydration_one_job_and_free_collect(engine, monkeypatch):
         missing = eng.search("acme", "nope", "x")
         sc.setJobGroup("collect-empty", "collect-empty")
         empty = missing.collect()
+        sc.setJobGroup("search", "search")
+        unwritten, no_parts = never.read(), eng.t["embeddings"].read(partition_values=[-1])
+        sc.setJobGroup("collect-empty-read", "collect-empty-read")
+        empty_reads = [unwritten.collect(), no_parts.collect()]
         # listener events arrive in submission order: once a later job
         # is visible, every job above is counted
         sc.setJobGroup("fence", "fence")
@@ -106,6 +115,8 @@ def test_search_hydration_one_job_and_free_collect(engine, monkeypatch):
     assert jobs("hydrate") == 1
     assert jobs("collect") == 0
     assert jobs("collect-empty") == 0
+    assert empty_reads == [[], []]
+    assert jobs("collect-empty-read") == 0
 
 
 def test_fetch_category_names(engine):
@@ -875,6 +886,65 @@ def test_search_many_where_adaptive_probe_widening(spark, tmp_path):
             "acme", "wiki", t, count=10, nprobe=1, where=pred).collect()]
         assert by_q.get(ix, []) == single, f"q{ix} diverged from single form"
         assert set(by_q.get(ix, [])) == keep  # every existing match found
+
+
+def test_search_many_widening_scores_each_list_once(spark, tmp_path, monkeypatch):
+    """Filtered search_many widens incrementally: across widening
+    rounds a query scores only lists it has not probed yet, so its
+    probed list sets are disjoint, and the widened batch pages still
+    equal the single-query search(where=) pages with every match found.
+    The multi-centroid shape of the adaptive widening test above, whose
+    matches sit in unprobed lists at nprobe=1."""
+    import json as _json
+
+    from go_vectorsearch_spark.api import SEARCH_QUERY_PREFIX, Engine
+
+    eng = Engine(spark, str(tmp_path / "root"))
+    docs = [
+        {"name": f"{'keep' if i % 4 == 0 else 'drop'}-{i}", "external_id": f"b{i}",
+         "document": _json.dumps({"body": f"widening test document {i} "
+                                          f"{'alpha' if i < 20 else 'omega'}"})}
+        for i in range(40)
+    ]
+    ids = eng.upload("acme", "wiki", docs)
+    assert eng.refresh_index("acme", "wiki", max_leaf=8) > 1
+    pred = F.col("name").startswith("keep")
+    keep = {ids[i] for i in range(40) if i % 4 == 0}
+    texts = ["widening test alpha", "widening test omega"]
+    qvecs = eng._embed_queries([SEARCH_QUERY_PREFIX + t for t in texts])
+
+    # the probed lists of every scoring round, per query index
+    rounds: dict[int, list[set]] = {ix: [] for ix in range(len(texts))}
+    topk, best_many = eng._vector_topk, eng._vector_best_many
+
+    def spy_topk(scope, qvec, n, nprobe, allowed=None, probe_ids=None,
+                 with_vector=False):
+        rounds[qvecs.index(list(qvec))].append(set(probe_ids))
+        return topk(scope, qvec, n, nprobe, allowed=allowed,
+                    probe_ids=probe_ids, with_vector=with_vector)
+
+    def spy_best_many(scope, qvecs_, probes, n, allowed=None):
+        for ix, lists in probes.items():
+            rounds[ix].append(set(lists))
+        return best_many(scope, qvecs_, probes, n, allowed)
+
+    monkeypatch.setattr(eng, "_vector_topk", spy_topk)
+    monkeypatch.setattr(eng, "_vector_best_many", spy_best_many)
+    out = eng.search_many("acme", "wiki", texts, count=10, nprobe=1, where=pred)
+    by_q: dict[int, list] = {}
+    for r in out.collect():
+        by_q.setdefault(r["q_ix"], []).append(r["document_id"])
+    monkeypatch.undo()
+
+    assert max(len(sets) for sets in rounds.values()) > 1, "nothing widened"
+    for ix, sets in rounds.items():
+        assert sum(map(len, sets)) == len(set().union(*sets)), (
+            f"q{ix} re-scored a probed list: {sets}")
+    for ix, t in enumerate(texts):
+        single = [r["document_id"] for r in eng.search(
+            "acme", "wiki", t, count=10, nprobe=1, where=pred).collect()]
+        assert by_q.get(ix, []) == single, f"q{ix} diverged from single form"
+        assert set(by_q.get(ix, [])) == keep
 
 
 @pytest.mark.slow

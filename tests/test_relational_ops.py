@@ -1,51 +1,10 @@
 """Unit tests for relational operator utilities not covered by the
-oracle-parity suite (write/skew paths)."""
+oracle-parity suite."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-from go_vectorsearch_spark.operators.relational import salted_join
-from go_vectorsearch_spark.sources.tables import load_table
-
-
-def _rows(df):
-    return sorted([tuple(r) for r in df.collect()], key=repr)
-
-
-def test_salted_join_equals_plain_join(spark, sf_smoke):
-    orders = load_table(spark, sf_smoke, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_smoke, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    plain = orders.join(cust, "o_custkey")
-    salted = salted_join(orders, cust, "o_custkey", n_salts=8)
-    assert sorted(plain.columns) == sorted(salted.columns)
-    assert _rows(plain) == _rows(salted.select(*plain.columns))
-
-
-def test_salted_join_spreads_hot_key(spark):
-    # one key owns 90% of the left side; salting must spread it over
-    # multiple salt values (the whole point)
-    left = spark.createDataFrame(
-        [(1, i) for i in range(900)] + [(k, 0) for k in range(2, 102)],
-        "k long, payload long",
-    )
-    right = spark.createDataFrame([(k,) for k in range(1, 102)], "k long")
-    out = salted_join(left, right, "k", n_salts=8)
-    assert out.count() == left.count()
-    salts = (
-        left.withColumn(
-            "_salt",
-            F.abs(F.xxhash64(F.col("k"), F.col("payload")) % 8).cast("int"),
-        )
-        .filter(F.col("k") == 1)
-        .select("_salt")
-        .distinct()
-        .count()
-    )
-    assert salts > 1  # the hot key's rows hash across salt buckets
 
 
 def test_asof_join_semantics(spark):
@@ -73,17 +32,6 @@ def test_asof_join_semantics(spark):
     assert out[2] == (t(20), 2.0)  # equal timestamp is inclusive
     assert out[3] == (None, None)  # no right row yet -> nulls
     assert out[4] == (None, None)  # key with no right rows at all
-
-
-def test_salted_join_rejects_outer(spark):
-    import pytest
-
-    left = spark.createDataFrame([(1, 1)], "k long, payload long")
-    right = spark.createDataFrame([(1,)], "k long")
-    with pytest.raises(ValueError, match="inner"):
-        salted_join(left, right, "k", how="full")
-    with pytest.raises(ValueError, match="inner"):
-        salted_join(left, right, "k", how="right")
 
 
 def test_asof_join_right_tie_deterministic(spark):

@@ -196,50 +196,3 @@ def test_stream_to_parquet_sink_equals_batch(spark, sf_smoke, tmp_path):
     )
     again = sorted(map(str, read_parquet_sink(spark, out).collect()))
     assert again == want
-
-
-def test_stream_stream_funnel_join_equals_batch(spark, sf_smoke, events_stream, events_batch):
-    """Watermarked stream-stream inner join (view -> purchase within the
-    attribution window, per user) drained with AvailableNow == the same
-    join in batch. The one-file source arrives in a single micro-batch,
-    so no pair straddles the watermark: exact equality holds."""
-    from go_vectorsearch_spark.streaming.joins import (
-        funnel_join_batch,
-        funnel_join_stream,
-    )
-
-    got = run_available_now(
-        funnel_join_stream(events_stream), "t_funnel", output_mode="append"
-    )
-    want = funnel_join_batch(events_batch)
-    assert _rows(got) == _rows(want)
-    assert got.count() > 0
-
-
-def test_funnel_join_batch_duckdb_parity(spark, sf_smoke, events_batch):
-    """The batch twin against an independent DuckDB range join."""
-    import duckdb
-
-    from go_vectorsearch_spark.streaming.joins import funnel_join_batch
-
-    got = _rows(
-        funnel_join_batch(events_batch).select(
-            "user_id", "view_id", "purchase_id", "lag_seconds"
-        )
-    )
-    con = duckdb.connect()
-    try:
-        con.execute(
-            f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_smoke}/events.parquet')"
-        )
-        want = con.execute("""
-            SELECT v.user_id, v.event_id AS view_id, p.event_id AS purchase_id,
-                   epoch_us(p.ts - v.ts) / 1000000.0 AS lag_seconds
-            FROM (SELECT * FROM events WHERE event_type = 'view') v
-            JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
-              ON v.user_id = p.user_id
-             AND p.ts BETWEEN v.ts AND v.ts + INTERVAL 1 HOUR
-        """).fetchall()
-    finally:
-        con.close()
-    assert got == sorted([tuple(r) for r in want], key=repr)
